@@ -1,4 +1,5 @@
-"""Lineage-AND-stats truncation for iterative DataFrame loops (r15).
+"""Lineage-AND-stats truncation for iterative DataFrame loops, and the
+one fixpoint driver those loops run on.
 
 ``localCheckpoint(eager=True)`` truncates *lineage* but Spark 4's
 ``LogicalRDD.fromDataset`` (``sql/execution/ExistingRDD.scala``,
@@ -37,78 +38,48 @@ compiles to a public JVM method — reachable from py4j, but a Spark
 upgrade could move it, so the helper degrades LOUDLY-BUT-SOFTLY: one
 ``warnings.warn`` per process and plain localCheckpoint behavior
 (correct, just re-exposed to the compounding pathology).
+
+:func:`fixpoint` is the superstep driver (the Pregelix shape: one
+generic loop over join/group-by round plans). Each round it runs the
+operator's step, materializes the result with the fused count, asks
+the operator's convergence test, and releases the checkpoint of the
+round it replaced — only ever a checkpoint it created itself, so loop
+invariants and the caller's initial state are never touched.
 """
 
 from __future__ import annotations
 
 import warnings
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
 _WARNED = False
 
 
-def materialize_count(df: DataFrame) -> tuple[DataFrame, int]:
-    """:func:`materialize`, but the action that materializes the
-    checkpoint IS a ``count()`` whose value is returned — ONE Spark job
-    for checkpoint + row count instead of the two an iterative loop
-    pays when it probes emptiness/size after checkpointing (r15, guide
-    §1.2/§2.4: the probe was a whole extra driver-coordinated job per
-    round, and in local mode per-job overhead is the floor cost of
-    every iterative operator).
-
-    Same stats/lineage truncation contract as :func:`materialize`; the
-    loud-but-soft fallback pays the extra count job but stays correct.
-    """
+def _checkpoint(df: DataFrame):
+    """Fused checkpoint + count → ``(frame, rows, rdd)`` where ``rdd`` is
+    the persisted RDD behind ``frame`` (the handle :func:`fixpoint`
+    unpersists), or ``None`` on the fallback path."""
     global _WARNED
-    try:
-        # eager=False: Dataset.localCheckpoint row-COPIES the internal
-        # RDD (UnsafeRows are buffer-reused per partition — caching
-        # them un-copied aliases every row in a partition to the last
-        # one) and MARKS it for local checkpointing without running the
-        # materializing count; our count below is that action.
-        ck = df.localCheckpoint(eager=False)
-        jdf = ck._jdf
-        spark = ck.sparkSession
-        jrdd = jdf.queryExecution().toRdd()
-        n = jrdd.count()  # the materializing action — count for free
-        fresh = spark._jsparkSession.internalCreateDataFrame(
-            jrdd, jdf.schema(), False
-        )
+    # eager=False: Dataset.localCheckpoint row-COPIES the internal RDD
+    # (UnsafeRows are buffer-reused per partition — caching them
+    # un-copied aliases every row in a partition to the last one) and
+    # MARKS it for local checkpointing without running the
+    # materializing count; the count below is that action.
+    ck = df.localCheckpoint(eager=False)
+    try:  # only the private-API calls: a failing action must propagate
         from pyspark.sql.classic.dataframe import DataFrame as _CDF
 
-        return _CDF(fresh, spark), int(n)
-    except Exception as exc:  # noqa: BLE001 — private-API drift guard
-        if not _WARNED:
-            _WARNED = True
-            warnings.warn(
-                "materialize_count: fused checkpoint+count unavailable "
-                f"({exc!r}); falling back to localCheckpoint + a "
-                "separate count job per loop round",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        ck = df.localCheckpoint(eager=True)
-        return ck, ck.count()
-
-
-def materialize(df: DataFrame) -> DataFrame:
-    """Eagerly materialize ``df`` (localCheckpoint) and return a frame
-    whose logical plan carries neither lineage NOR compounded size
-    statistics. Drop-in for ``.localCheckpoint(eager=True)`` in
-    iterative loops — chain as ``.transform(materialize)``."""
-    ck = df.localCheckpoint(eager=True)
-    global _WARNED
-    try:
         jdf = ck._jdf
-        spark = ck.sparkSession
         jrdd = jdf.queryExecution().toRdd()
-        fresh = spark._jsparkSession.internalCreateDataFrame(
-            jrdd, jdf.schema(), False
+        fresh = _CDF(
+            ck.sparkSession._jsparkSession.internalCreateDataFrame(
+                jrdd, jdf.schema(), False
+            ),
+            ck.sparkSession,
         )
-        from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
-        return _CDF(fresh, spark)
+        persisted = jdf.logicalPlan().rdd()
     except Exception as exc:  # noqa: BLE001 — private-API drift guard
         if not _WARNED:
             _WARNED = True
@@ -118,6 +89,76 @@ def materialize(df: DataFrame) -> DataFrame:
                 "iterative self-join loops regain the compounding "
                 "size-estimate pathology (see operators/_materialize.py)",
                 RuntimeWarning,
-                stacklevel=2,
+                stacklevel=3,
             )
-        return ck
+        return ck, ck.count(), None
+    return fresh, int(jrdd.count()), persisted
+
+
+def materialize_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eagerly materialize ``df`` and return ``(frame, row count)``: the
+    action that materializes the checkpoint IS the ``count()``, so an
+    iterative loop's size/emptiness probe costs no extra Spark job (in
+    local mode per-job overhead is the floor cost of every iterative
+    operator). The returned frame's plan carries neither lineage NOR
+    compounded size statistics."""
+    out, n, _ = _checkpoint(df)
+    return out, n
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """:func:`materialize_count` without the count — a drop-in for
+    ``.localCheckpoint(eager=True)``; chain as ``.transform(materialize)``."""
+    return _checkpoint(df)[0]
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    *,
+    name: str,
+    max_rounds: int,
+    done: Callable[[DataFrame, int | None], bool] | None = None,
+    checkpoint: bool = True,
+    hint: str = "",
+) -> DataFrame:
+    """Run ``state ← step(state, round)`` for at most ``max_rounds``
+    rounds and return the last state. Each round is materialized with
+    the fused count, then ``done(new_state, rows)`` tests it. With
+    ``done=None`` exactly ``max_rounds`` rounds run; otherwise running
+    out of rounds raises ``RuntimeError`` naming ``name`` (plus
+    ``hint``) — a silently truncated result would look plausible.
+
+    After ``done``, the checkpoint of the replaced round is released if
+    this driver made it (never the initial ``state`` or an invariant
+    the step reads; never the returned state), so ``done`` may read
+    the previous state but nothing kept by the caller may.
+    ``checkpoint=False`` keeps the loop one lazy, explainable plan
+    (``rows`` is then ``None``)."""
+    owned = None  # persisted RDD behind ``state`` when this driver made it
+    for r in range(max_rounds):
+        new = step(state, r)
+        new, rows, rdd = _checkpoint(new) if checkpoint else (new, None, None)
+        stop = done is not None and done(new, rows)
+        if owned is not None:
+            _release(owned)
+        state, owned = new, rdd
+        if stop:
+            return state
+    if done is None:
+        return state
+    raise RuntimeError(
+        f"{name}: no fixpoint in {max_rounds} rounds"
+        + (f" — {hint}" if hint else "")
+    )
+
+
+def _release(rdd) -> None:
+    """Drop a superseded round's checkpoint blocks. ``RDD.unpersist``
+    would log a WARN per round that a local checkpoint cannot be
+    recomputed — intended here — so call the ``SparkContext`` method it
+    wraps (``private[spark]``: same drift guard as :func:`_checkpoint`)."""
+    try:
+        rdd.context().unpersistRDD(rdd.id(), False)
+    except Exception:  # noqa: BLE001 — private-API drift guard
+        rdd.unpersist(False)

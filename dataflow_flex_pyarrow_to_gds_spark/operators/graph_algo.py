@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .graph import NODE_ID, SOURCE_ID, TARGET_ID
-from ._materialize import materialize, materialize_count
+from ._materialize import fixpoint, materialize, materialize_count
 
 
 def node_degrees(edges: DataFrame) -> DataFrame:
@@ -84,8 +84,8 @@ def connected_components(
     # only decrease, so every fixpoint is still the min-id labeling, but
     # the reach radius doubles per round: O(log diameter) rounds instead
     # of O(diameter).
-    comp = nodes.select(NODE_ID, F.col(NODE_ID).alias("component"))
-    for _ in range(max_iter):
+    def _round(comp: DataFrame, _) -> DataFrame:
+        comp = comp.select(NODE_ID, "component")
         contrib = (
             comp.join(sym, comp[NODE_ID] == sym["a"])
             .select(
@@ -103,7 +103,7 @@ def connected_components(
                 "_old"
             ),
         )
-        new_comp = nbr_min.join(
+        return nbr_min.join(
             comp.select(
                 F.col(NODE_ID).alias("_c1"),
                 F.col("component").alias("_c2"),
@@ -114,14 +114,18 @@ def connected_components(
             F.least("_c1", "_c2").alias("component"),
             (F.least("_c1", "_c2") < F.col("_old")).alias("_chg"),
         )
-        # checkpoint + count in ONE job; the count doubles as a sanity
-        # floor (every node keeps a row via its own=1 contribution)
-        new_comp, _ = materialize_count(new_comp)
-        changed = new_comp.filter("_chg").limit(1).count()
-        comp = new_comp.select(NODE_ID, "component")
-        if changed == 0:
-            return comp
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+
+    comp = nodes.select(NODE_ID, F.col(NODE_ID).alias("component"))
+    return fixpoint(
+        comp, _round, name="connected_components", max_rounds=max_iter,
+        done=_settled,
+    ).select(NODE_ID, "component")
+
+
+def _settled(state: DataFrame, _) -> bool:
+    """:func:`fixpoint` ``done`` test for states that carry a per-row
+    ``_chg`` flag: no row changed this round."""
+    return state.filter("_chg").limit(1).count() == 0
 
 
 def _sym(pairs: DataFrame) -> DataFrame:
@@ -178,9 +182,11 @@ def connected_components_star(
         .distinct()
         .transform(materialize)
     )
-    prev_sig = _sig(pairs)
+    prev, prev_sig = pairs, _sig(pairs)
 
-    for _ in range(max_iter):
+    def _round(pairs: DataFrame, _) -> DataFrame:
+        nonlocal prev
+        prev = pairs
         sym = _sym(pairs)
         # large-star: (v, m(u)) for v > u; m < v always, so (m, v) is
         # already canonical
@@ -195,7 +201,7 @@ def connected_components_star(
         # small-star on the large-star output
         sym2 = _sym(large)
         mins2 = _neighborhood_mins(sym2)
-        small = (
+        return (
             sym2.join(mins2, "u")
             .filter(F.col("v") <= F.col("u"))
             .select(F.col("m").alias("u"), F.col("v"))
@@ -204,29 +210,29 @@ def connected_components_star(
             )
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .transform(materialize)  # truncate lineage per round
         )
-        # Convergence: a cheap order-independent signature (count +
-        # bit_xor of pair hashes — ONE aggregate over the checkpointed
-        # set, carried between rounds) gates the EXACT check. Only when
-        # signatures match do we pay an exceptAll; with equal counts and
-        # distinct sets, one-sided emptiness ⟺ set equality. Rounds that
-        # are still moving cost one aggregate, not two exceptAll shuffles
-        # (measured: the exact-check-every-round variant spent ~2/3 of
-        # its wall on convergence checking).
+
+    # Convergence: a cheap order-independent signature (count + bit_xor
+    # of pair hashes — ONE aggregate over the checkpointed set, carried
+    # between rounds) gates the EXACT check. Only when signatures match
+    # do we pay an exceptAll; with equal counts and distinct sets,
+    # one-sided emptiness ⟺ set equality. Rounds that are still moving
+    # cost one aggregate, not two exceptAll shuffles (measured: the
+    # exact-check-every-round variant spent ~2/3 of its wall on
+    # convergence checking).
+    def _converged(small: DataFrame, _) -> bool:
+        nonlocal prev_sig
         sig = _sig(small)
-        converged = (
-            sig == prev_sig
-            and small.exceptAll(pairs).limit(1).count() == 0
+        same = (
+            sig == prev_sig and small.exceptAll(prev).limit(1).count() == 0
         )
-        pairs = small
         prev_sig = sig
-        if converged:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components_star: no fixpoint in {max_iter} rounds"
-        )
+        return same
+
+    pairs = fixpoint(
+        pairs, _round, name="connected_components_star",
+        max_rounds=max_iter, done=_converged,
+    )
 
     # converged star forest: every pair is (root, member)
     membership = pairs.groupBy(F.col("v").alias(NODE_ID)).agg(
@@ -372,36 +378,61 @@ def pagerank_fixedpoint(
         # re-introduce the per-iteration edge Exchange this mode
         # deletes); the hint pins the per-iteration join to sort-merge
         edge_pairs = edge_pairs.hint("merge")
-    for _ in range(iters):
-        contrib = (
-            edge_pairs
-            .join(ranks.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .join(outdeg.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .select(
-                F.col(TARGET_ID).alias(NODE_ID),
-                F.expr("rank_fp div _od").alias("_c"),
-            )
+    # checkpoint=False exists for plan inspection (explain_audit) — a
+    # checkpointed frame explains as an opaque RDD scan
+    return _rank_rounds(
+        "pagerank_fixedpoint", nodes, edge_pairs, outdeg, ranks,
+        contrib=F.expr("rank_fp div _od"), base=F.lit(base),
+        damping_num=damping_num, damping_den=damping_den, iters=iters,
+        checkpoint=checkpoint,
+    )
+
+
+def _rank_rounds(
+    name: str,
+    nodes: DataFrame,
+    edges: DataFrame,
+    out: DataFrame,
+    ranks: DataFrame,
+    *,
+    contrib: Column,
+    base: Column,
+    damping_num: int,
+    damping_den: int,
+    iters: int,
+    checkpoint: bool,
+) -> DataFrame:
+    """The PageRank-family power iteration, ``iters`` fixed rounds of::
+
+        r(v) ← base + (damping_num · Σ_{u→v} contrib) div damping_den
+
+    ``contrib`` is evaluated per edge over the source's ``rank_fp`` and
+    its row of ``out`` (out-degree / out-weight, keyed by ``nodeId``);
+    ``base`` over the ``nodes`` row. Per round ONE edge-keyed join of
+    the skinny rank table + one partially-aggregated groupBy."""
+
+    def _round(ranks: DataFrame, _) -> DataFrame:
+        sums = (
+            edges.join(ranks.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
+            .join(out.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
+            .select(F.col(TARGET_ID).alias(NODE_ID), contrib.alias("_c"))
+            .groupBy(NODE_ID)
+            .agg(F.sum("_c").alias("_s"))
         )
-        sums = contrib.groupBy(NODE_ID).agg(F.sum("_c").alias("_s"))
-        ranks = (
-            nodes.join(sums, NODE_ID, "left_outer")
-            .select(
-                NODE_ID,
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({damping_num} * coalesce(_s, 0L))"
-                        f" div {damping_den}"
-                    )
-                ).cast("long").alias("rank_fp"),
-            )
+        return nodes.join(sums, NODE_ID, "left_outer").select(
+            NODE_ID,
+            (
+                base
+                + F.expr(
+                    f"({damping_num} * coalesce(_s, 0L))"
+                    f" div {damping_den}"
+                )
+            ).cast("long").alias("rank_fp"),
         )
-        if checkpoint:
-            # truncate lineage per round; checkpoint=False exists for
-            # plan inspection (explain_audit) — the checkpointed frame
-            # explains as an opaque RDD scan
-            ranks = ranks.transform(materialize)
-    return ranks
+
+    return fixpoint(
+        ranks, _round, name=name, max_rounds=iters, checkpoint=checkpoint
+    )
 
 
 def pagerank_weighted(
@@ -470,31 +501,14 @@ def pagerank_weighted(
     if checkpoint:
         wsum = wsum.transform(materialize)
     ranks = nodes.select(NODE_ID, F.lit(r0).cast("long").alias("rank_fp"))
-    for _ in range(iters):
-        contrib = (
-            e.join(ranks.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .join(wsum.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .select(
-                F.col(TARGET_ID).alias(NODE_ID),
-                F.expr(
-                    "(CAST(rank_fp AS DECIMAL(25,0)) * _w) div _wt"
-                ).cast("long").alias("_c"),
-            )
-        )
-        sums = contrib.groupBy(NODE_ID).agg(F.sum("_c").alias("_s"))
-        ranks = nodes.join(sums, NODE_ID, "left_outer").select(
-            NODE_ID,
-            (
-                F.lit(base)
-                + F.expr(
-                    f"({damping_num} * coalesce(_s, 0L))"
-                    f" div {damping_den}"
-                )
-            ).cast("long").alias("rank_fp"),
-        )
-        if checkpoint:
-            ranks = ranks.transform(materialize)
-    return ranks
+    return _rank_rounds(
+        "pagerank_weighted", nodes, e, wsum, ranks,
+        contrib=F.expr(
+            "(CAST(rank_fp AS DECIMAL(25,0)) * _w) div _wt"
+        ).cast("long"),
+        base=F.lit(base), damping_num=damping_num, damping_den=damping_den,
+        iters=iters, checkpoint=checkpoint,
+    )
 
 
 def dag_longest_path(
@@ -546,8 +560,9 @@ def dag_longest_path(
     )
     e = e.transform(materialize)
     levels = nodes.select(NODE_ID, F.lit(0).cast("long").alias("level"))
-    converged = False
-    for _ in range(max_iter):
+
+    def _round(levels: DataFrame, _) -> DataFrame:
+        levels = levels.select(NODE_ID, "level")
         cand = (
             e.join(
                 levels.withColumnRenamed(NODE_ID, "_s"), "_s"
@@ -559,34 +574,20 @@ def dag_longest_path(
         # next level table (levels grow monotonically, so changed ⟺
         # strictly greater) — the old probe re-joined the two level
         # tables in a separate job per round
-        nxt = (
-            levels.join(cand, NODE_ID, "left_outer")
-            .select(
-                NODE_ID,
-                F.greatest(F.col("level"), F.coalesce("_nl", F.lit(0)))
-                .cast("long")
-                .alias("level"),
-                (
-                    F.greatest(F.col("level"), F.coalesce("_nl", F.lit(0)))
-                    > F.col("level")
-                ).alias("_chg"),
-            )
+        nl = F.greatest(F.col("level"), F.coalesce("_nl", F.lit(0)))
+        return levels.join(cand, NODE_ID, "left_outer").select(
+            NODE_ID,
+            nl.cast("long").alias("level"),
+            (nl > F.col("level")).alias("_chg"),
         )
-        if checkpoint:
-            nxt, _ = materialize_count(nxt)
-        still = nxt.filter("_chg").limit(1).count() > 0
-        levels = nxt.select(NODE_ID, "level")
-        if not still:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"dag_longest_path: levels still changing after {max_iter} "
-            "rounds — the input has a cycle (or raise max_iter for a "
-            "deeper DAG); a truncated result would silently understate "
-            "depths"
-        )
-    return levels
+
+    return fixpoint(
+        levels, _round, name="dag_longest_path", max_rounds=max_iter,
+        done=_settled, checkpoint=checkpoint,
+        hint="levels still changing: the input has a cycle (or raise "
+        "max_iter for a deeper DAG); a truncated result would silently "
+        "understate depths",
+    ).select(NODE_ID, "level")
 
 
 def personalized_pagerank_fixedpoint(
@@ -656,32 +657,13 @@ def personalized_pagerank_fixedpoint(
         NODE_ID,
         (F.col("_seed") * F.lit(r0)).cast("long").alias("rank_fp"),
     )
-    for _ in range(iters):
-        contrib = (
-            e.join(ranks.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .join(outdeg.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .select(
-                F.col(TARGET_ID).alias(NODE_ID),
-                F.expr("rank_fp div _od").alias("_c"),
-            )
-        )
-        sums = contrib.groupBy(NODE_ID).agg(F.sum("_c").alias("_s"))
-        ranks = (
-            nodes.join(sums, NODE_ID, "left_outer")
-            .select(
-                NODE_ID,
-                (
-                    F.col("_seed") * F.lit(base)
-                    + F.expr(
-                        f"({damping_num} * coalesce(_s, 0L))"
-                        f" div {damping_den}"
-                    )
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-        if checkpoint:
-            ranks = ranks.transform(materialize)
-    return ranks
+    return _rank_rounds(
+        "personalized_pagerank_fixedpoint", nodes, e, outdeg, ranks,
+        contrib=F.expr("rank_fp div _od"),
+        base=F.col("_seed") * F.lit(base),
+        damping_num=damping_num, damping_den=damping_den, iters=iters,
+        checkpoint=checkpoint,
+    )
 
 
 def triangle_count(edges: DataFrame, src: str = SOURCE_ID, dst: str = TARGET_ID) -> DataFrame:
@@ -863,9 +845,9 @@ def label_propagation(
     if checkpoint:
         sym = sym.transform(materialize)
     labels = nodes.select(NODE_ID, F.col(NODE_ID).alias("label"))
-    from pyspark.sql import Window
+    w = Window.partitionBy(NODE_ID).orderBy(F.desc("_c"), "label")
 
-    for _ in range(iters):
+    def _round(labels: DataFrame, _) -> DataFrame:
         # label table is |V| skinny rows vs |E| sym rows — broadcast it
         # so the big checkpointed edge list never re-shuffles per round
         counts = (
@@ -874,19 +856,20 @@ def label_propagation(
             .groupBy(F.col("b").alias(NODE_ID), "label")
             .agg(F.count(F.lit(1)).alias("_c"))
         )
-        w = Window.partitionBy(NODE_ID).orderBy(F.desc("_c"), "label")
         best = (
             counts.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select(NODE_ID, F.col("label").alias("_new"))
         )
-        labels = labels.join(best, NODE_ID, "left_outer").select(
+        return labels.join(best, NODE_ID, "left_outer").select(
             NODE_ID,
             F.coalesce("_new", "label").alias("label"),
         )
-        if checkpoint:
-            labels = labels.transform(materialize)  # truncate lineage
-    return labels
+
+    return fixpoint(
+        labels, _round, name="label_propagation", max_rounds=iters,
+        checkpoint=checkpoint,
+    )
 
 
 def bfs_hop_distance(
@@ -1131,7 +1114,8 @@ def kcore(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    for _ in range(max_iter):
+
+    def _round(e: DataFrame, _) -> DataFrame:
         deg = (
             e.select(F.col("u").alias("n"))
             .unionByName(e.select(F.col("v").alias("n")))
@@ -1139,23 +1123,27 @@ def kcore(
             .agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("n")
-        # checkpoint + size probe fused into ONE job (r15)
-        e2, n2 = materialize_count(
+        return (
             e.join(keep.withColumnRenamed("n", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("n", "v"), "v", "left_semi")
             .select("u", "v")
         )
-        removed = n_edges - n2
-        e, n_edges = e2, n2
-        if removed == 0:
-            return (
-                e.select(F.col("u").alias(NODE_ID))
-                .unionByName(e.select(F.col("v").alias(NODE_ID)))
-                .groupBy(NODE_ID)
-                .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
-                .filter(F.col("core_degree") >= k)
-            )
-    raise RuntimeError(f"kcore: no fixpoint in {max_iter} rounds")
+
+    def _none_removed(_, rows: int) -> bool:
+        nonlocal n_edges
+        same, n_edges = rows == n_edges, rows
+        return same
+
+    e = fixpoint(
+        e, _round, name="kcore", max_rounds=max_iter, done=_none_removed
+    )
+    return (
+        e.select(F.col("u").alias(NODE_ID))
+        .unionByName(e.select(F.col("v").alias(NODE_ID)))
+        .groupBy(NODE_ID)
+        .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
+        .filter(F.col("core_degree") >= k)
+    )
 
 
 def _l1_normalize_fp(raw: DataFrame, scale: int) -> DataFrame:
@@ -1226,34 +1214,33 @@ def hits_fixedpoint(
         .distinct()
         .select(NODE_ID, F.lit(scale).cast("long").alias("_score"))
     )
-    auth = None
-    for _ in range(iters):
-        a_raw = (
-            e.join(hubs.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .groupBy(F.col(TARGET_ID).alias(NODE_ID))
+
+    def _half(scores: DataFrame, by: str, to: str) -> DataFrame:
+        raw = (
+            e.join(scores.withColumnRenamed(NODE_ID, by), by)
+            .groupBy(F.col(to).alias(NODE_ID))
             .agg(
                 F.sum(F.col("_score").cast("decimal(25,0)")).alias("_raw")
             )
         )
-        auth = _l1_normalize_fp(a_raw, scale)
-        h_raw = (
-            e.join(auth.withColumnRenamed(NODE_ID, TARGET_ID), TARGET_ID)
-            .groupBy(F.col(SOURCE_ID).alias(NODE_ID))
-            .agg(
-                F.sum(F.col("_score").cast("decimal(25,0)")).alias("_raw")
-            )
-        )
-        hubs = _l1_normalize_fp(h_raw, scale)
-        if checkpoint:
-            # Only the hubs checkpoint is needed to truncate lineage:
-            # each round's auth hangs exactly one join+agg+normalize off
-            # the PREVIOUS round's hubs checkpoint, so the chain never
-            # grows, and the final union re-derives the last auth from
-            # the last checkpoint (exact integer arithmetic — identical
-            # values). Checkpointing auth too measured 7.3 s vs 4.4 s
-            # for 3 iterations at sf0.1 — half the eager
-            # materializations for the same contract.
-            hubs = hubs.transform(materialize)
+        return _l1_normalize_fp(raw, scale)
+
+    # The loop carries AUTH, one checkpoint per round: round r's auth
+    # hangs one hub half-step off round r-1's auth checkpoint (round 0
+    # starts from the uniform hubs), and the returned hubs are one
+    # half-step off the LAST checkpoint — so no superseded round is ever
+    # read again and each can be released. Checkpointing hubs as well
+    # measured 7.3 s vs 4.4 s for 3 iterations at sf0.1 — half the eager
+    # materializations for the same contract.
+    auth = fixpoint(
+        hubs,
+        lambda st, r: _half(
+            st if r == 0 else _half(st, TARGET_ID, SOURCE_ID),
+            SOURCE_ID, TARGET_ID,
+        ),
+        name="hits_fixedpoint", max_rounds=iters, checkpoint=checkpoint,
+    )
+    hubs = _half(auth, TARGET_ID, SOURCE_ID)
     return hubs.select(
         NODE_ID,
         F.lit("hub").alias("kind"),
@@ -1323,15 +1310,19 @@ def eigenvector_centrality(
         .transform(materialize)
     )
     scores = nodes.select(NODE_ID, F.lit(scale).cast("long").alias("_score"))
-    for _ in range(iters):
+
+    def _round(scores: DataFrame, _) -> DataFrame:
         raw = (
             e.join(scores.withColumnRenamed(NODE_ID, "_s"), "_s")
             .groupBy(F.col("_t").alias(NODE_ID))
             .agg(F.sum(F.col("_score").cast("decimal(25,0)")).alias("_raw"))
         )
-        scores = _l1_normalize_fp(raw, scale)
-        if checkpoint:
-            scores = scores.transform(materialize)
+        return _l1_normalize_fp(raw, scale)
+
+    scores = fixpoint(
+        scores, _round, name="eigenvector_centrality", max_rounds=iters,
+        checkpoint=checkpoint,
+    )
     return nodes.join(scores, NODE_ID, "left_outer").select(
         NODE_ID,
         F.coalesce(F.col("_score"), F.lit(0)).cast("long").alias("score_fp"),
@@ -2578,7 +2569,9 @@ def shortest_paths(
     dist = seeds.select(
         F.col(NODE_ID), F.lit(0).cast("long").alias("dist")
     ).distinct().transform(materialize)
-    for _ in range(max_iter):
+
+    def _round(dist: DataFrame, _) -> DataFrame:
+        dist = dist.select(NODE_ID, "dist")
         relaxed = (
             dist.join(sym, dist[NODE_ID] == sym["_u"])
             .select(
@@ -2590,7 +2583,7 @@ def shortest_paths(
         # (own rows marked; improved ⟺ newly reached, or strictly
         # smaller than the own-row minimum) — the old probe re-joined
         # the two distance tables in a separate job per round
-        new_dist = (
+        return (
             dist.select(NODE_ID, "dist", F.lit(1).alias("_own"))
             .unionByName(relaxed.withColumn("_own", F.lit(0)))
             .groupBy(NODE_ID)
@@ -2609,12 +2602,11 @@ def shortest_paths(
                 ).alias("_chg"),
             )
         )
-        new_dist, _ = materialize_count(new_dist)
-        improved = new_dist.filter("_chg").limit(1).count()
-        dist = new_dist.select(NODE_ID, "dist")
-        if improved == 0:
-            return dist
-    raise RuntimeError(f"shortest_paths: no fixpoint in {max_iter} rounds")
+
+    return fixpoint(
+        dist, _round, name="shortest_paths", max_rounds=max_iter,
+        done=_settled,
+    ).select(NODE_ID, "dist")
 
 
 def k_shortest_path_lengths(
@@ -2703,12 +2695,9 @@ def k_shortest_path_lengths(
         .transform(materialize)
     )
     topk = Window.partitionBy(NODE_ID).orderBy("dist")
-    # range(max_iter + 1): the change probe needs one iteration BEYOND
-    # the last productive relaxation to observe the fixpoint, so sets
-    # finishing in exactly max_iter rounds must not trip the for/else
-    # raise (the repo's recurring exactly-at-budget class — scc
-    # backward mark r13, mst merge/doubling r14).
-    for _ in range(max_iter + 1):
+
+    def _round(state: DataFrame, _) -> DataFrame:
+        state = state.select(NODE_ID, "dist")
         relaxed = state.join(sym, state[NODE_ID] == sym["_u"]).select(
             F.col("_v").alias(NODE_ID),
             (F.col("dist") + F.col("_w")).alias("dist"),
@@ -2721,7 +2710,7 @@ def k_shortest_path_lengths(
         # cost existed in the previous state, so the fixpoint probe is
         # a cheap flag filter on the checkpoint instead of a separate
         # anti-join job per round
-        new_state = (
+        return (
             state.select(NODE_ID, "dist", F.lit(1).alias("_own"))
             .unionByName(relaxed.withColumn("_own", F.lit(0)))
             .repartition(NODE_ID)
@@ -2731,21 +2720,21 @@ def k_shortest_path_lengths(
             .filter(F.col("_rn") <= k)
             .drop("_rn")
         )
-        new_state, _ = materialize_count(new_state)
-        # monotone under the sorted-set order: a row leaves the state
-        # only when a strictly smaller candidate evicts it, so
-        # new \ old = ∅  ⟺  new = old (fixpoint) — and new \ old is
-        # exactly the surviving rows whose cost no prior state row had
-        changed = new_state.filter(F.col("_own") == 0).limit(1).count() > 0
-        state = new_state.select(NODE_ID, "dist")
-        if not changed:
-            break
-    else:
-        raise RuntimeError(
-            "k_shortest_path_lengths: sets still improving after "
-            f"{max_iter} rounds — raise max_iter; truncated sets would "
-            "silently under-report the k-th cost"
-        )
+
+    # monotone under the sorted-set order: a row leaves the state only
+    # when a strictly smaller candidate evicts it, so new \ old = ∅ ⟺
+    # new = old (fixpoint) — and new \ old is exactly the surviving rows
+    # whose cost no prior state row had. max_iter + 1 rounds: the probe
+    # needs one round BEYOND the last productive relaxation to observe
+    # the fixpoint, so sets finishing in exactly max_iter rounds must
+    # not raise.
+    state = fixpoint(
+        state, _round, name="k_shortest_path_lengths",
+        max_rounds=max_iter + 1,
+        done=lambda st, _: st.filter(F.col("_own") == 0).limit(1).count() == 0,
+        hint="sets still improving: raise max_iter; truncated sets would "
+        "silently under-report the k-th cost",
+    )
     return state.select(
         NODE_ID,
         F.row_number().over(topk).alias("k_rank"),
@@ -2860,11 +2849,12 @@ def ktruss(edges: DataFrame, k: int, *, max_iter: int = 30) -> DataFrame:
         )
         .filter(F.col("_u") != F.col("_v"))
         .distinct()
-        .transform(materialize)
     )
-    n = e.count()
+    e, n = materialize_count(e)
     o = _oriented_edges(e).transform(materialize)
-    for _ in range(max_iter):
+
+    def _round(o: DataFrame, _) -> DataFrame:
+        o = o.select("_u", "_v", "_src", "_dst", "_dd")
         tri = _triangles_deg_oriented(o)
         # the triple is in (degree, id) orientation order, NOT id order
         # — canonicalize each of the 3 edges back to (_u < _v) for the
@@ -2890,27 +2880,23 @@ def ktruss(edges: DataFrame, k: int, *, max_iter: int = 30) -> DataFrame:
         sup = t3.groupBy("_u", "_v").agg(
             F.count(F.lit(1)).cast("long").alias("_s")
         )
-        # r15: checkpoint + size probe fused; the next round's oriented
-        # view is a projection of the SAME checkpoint (the second
-        # per-round materialize was a redundant copy job)
-        kept, m = materialize_count(
-            o.join(sup, ["_u", "_v"]).filter(F.col("_s") >= k - 2)
-        )
-        o = kept.select("_u", "_v", "_src", "_dst", "_dd")
-        if m == n:
-            return kept.select(
-                F.col("_u").alias(SOURCE_ID),
-                F.col("_v").alias(TARGET_ID),
-                F.col("_s").alias("support"),
-            )
-        n = m
-        if m == 0:
-            return kept.select(
-                F.col("_u").alias(SOURCE_ID),
-                F.col("_v").alias(TARGET_ID),
-                F.col("_s").alias("support"),
-            )
-    raise RuntimeError(f"ktruss: no fixpoint in {max_iter} rounds")
+        # the next round's oriented view is a projection of this
+        # round's checkpoint — no second per-round materialize
+        return o.join(sup, ["_u", "_v"]).filter(F.col("_s") >= k - 2)
+
+    def _peeled(_, m: int) -> bool:
+        nonlocal n
+        stop, n = m in (n, 0), m
+        return stop
+
+    kept = fixpoint(
+        o, _round, name="ktruss", max_rounds=max_iter, done=_peeled
+    )
+    return kept.select(
+        F.col("_u").alias(SOURCE_ID),
+        F.col("_v").alias(TARGET_ID),
+        F.col("_s").alias("support"),
+    )
 
 
 def community_conductance(
@@ -3138,7 +3124,7 @@ def k1_coloring(
     # join from scratch — the whole Jones–Plassmann round ran TWICE per
     # round plus a third job for the emptiness probe; this shape runs
     # it once and probes a checkpointed NULL flag.
-    st = (
+    st, n = materialize_count(
         sym.select(F.col("_u").alias("_n"))
         .distinct()
         .select(
@@ -3146,19 +3132,19 @@ def k1_coloring(
             _prio(F.col("_n")).alias("_h"),
             F.lit(None).cast("long").alias("color"),
         )
-        .transform(materialize)
     )
-    for _ in range(max_iter):
-        if st.filter(F.col("color").isNull()).limit(1).count() == 0:
-            return st.select(F.col("_n").alias(NODE_ID), "color")
-        st = _k1_round_state(sym, st).transform(materialize)
-    if st.filter(F.col("color").isNull()).limit(1).count() == 0:
-        return st.select(F.col("_n").alias(NODE_ID), "color")
-    raise RuntimeError(
-        f"k1_coloring: nodes still uncolored after {max_iter} rounds — "
-        "raise max_iter (rounds are O(log n) expected; a silent partial "
-        "coloring would look proper and mean nothing)"
-    )
+    if n:
+        st = fixpoint(
+            st, lambda st, _: _k1_round_state(sym, st),
+            name="k1_coloring", max_rounds=max_iter,
+            done=lambda st, _: (
+                st.filter(F.col("color").isNull()).limit(1).count() == 0
+            ),
+            hint="nodes still uncolored: raise max_iter (rounds are "
+            "O(log n) expected; a silent partial coloring would look "
+            "proper and mean nothing)",
+        )
+    return st.select(F.col("_n").alias(NODE_ID), "color")
 
 
 def _k1_round_state(sym: DataFrame, st: DataFrame) -> DataFrame:
@@ -3265,37 +3251,16 @@ def articlerank_fixedpoint(
     if checkpoint:
         outdeg = outdeg.transform(materialize)
     ranks = nodes.select(NODE_ID, F.lit(r0).cast("long").alias("rank_fp"))
-    for _ in range(iters):
-        contrib = (
-            edge_pairs
-            .join(ranks.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .join(outdeg.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .select(
-                F.col(TARGET_ID).alias(NODE_ID),
-                F.expr(
-                    f"CAST((CAST(rank_fp AS DECIMAL(38,0)) * {n_nodes})"
-                    f" div (CAST(_od AS DECIMAL(38,0)) * {n_nodes}"
-                    f"      + {n_edges}) AS LONG)"
-                ).alias("_c"),
-            )
-        )
-        sums = contrib.groupBy(NODE_ID).agg(F.sum("_c").alias("_s"))
-        ranks = (
-            nodes.join(sums, NODE_ID, "left_outer")
-            .select(
-                NODE_ID,
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({damping_num} * coalesce(_s, 0L))"
-                        f" div {damping_den}"
-                    )
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-        if checkpoint:
-            ranks = ranks.transform(materialize)
-    return ranks
+    return _rank_rounds(
+        "articlerank_fixedpoint", nodes, edge_pairs, outdeg, ranks,
+        contrib=F.expr(
+            f"CAST((CAST(rank_fp AS DECIMAL(38,0)) * {n_nodes})"
+            f" div (CAST(_od AS DECIMAL(38,0)) * {n_nodes}"
+            f"      + {n_edges}) AS LONG)"
+        ),
+        base=F.lit(base), damping_num=damping_num, damping_den=damping_den,
+        iters=iters, checkpoint=checkpoint,
+    )
 
 
 def louvain_local_move(
@@ -3370,7 +3335,8 @@ def louvain_local_move(
         .select("_n", "_d", F.col("_n").cast("long").alias("_l"))
         .transform(materialize)
     )
-    for t in range(rounds):
+
+    def _sweep(st: DataFrame, t: int) -> DataFrame:
         nbr_lab = sym.join(
             st.select(F.col("_n").alias("_v"), "_l"), "_v"
         ).select(F.col("_u").alias("_n"), F.col("_l").alias("_c"))
@@ -3436,12 +3402,16 @@ def louvain_local_move(
             )
             .select("_n", (-F.col("_best.nc")).cast("long").alias("_new"))
         )
-        st_next = st.join(moved, "_n", "left_outer").select(
+        return st.join(moved, "_n", "left_outer").select(
             "_n",
             "_d",
             F.coalesce("_new", "_l").cast("long").alias("_l"),
         )
-        st = st_next.transform(materialize) if checkpoint else st_next
+
+    st = fixpoint(
+        st, _sweep, name="louvain_local_move", max_rounds=rounds,
+        checkpoint=checkpoint,
+    )
     return st.select(F.col("_n").alias(NODE_ID), F.col("_l").alias("label"))
 
 

@@ -153,6 +153,12 @@ def fixpoint(
     )
 
 
+def _settled(state: DataFrame, _) -> bool:
+    """:func:`fixpoint` ``done`` test for states that carry a per-row
+    ``_chg`` flag: no row changed this round."""
+    return state.filter("_chg").limit(1).count() == 0
+
+
 def _release(rdd) -> None:
     """Drop a superseded round's checkpoint blocks. ``RDD.unpersist``
     would log a WARN per round that a local checkpoint cannot be

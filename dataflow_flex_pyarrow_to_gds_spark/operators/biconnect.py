@@ -63,7 +63,7 @@ from pyspark.sql.window import Window as W
 
 from .graph import NODE_ID, SOURCE_ID, TARGET_ID
 from .graph_algo import connected_components_star
-from ._materialize import materialize, materialize_count
+from ._materialize import fixpoint, materialize, materialize_count
 
 
 def _canon_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -152,19 +152,26 @@ def _preorder(tree: DataFrame, max_depth: int) -> DataFrame:
     tree, offset by per-root bases so intervals never collide across
     components)."""
     dmax = tree.agg(F.max("depth")).first()[0] or 0
-    sized = tree.withColumn("size", F.lit(1).cast("long")).transform(materialize)
-    for d in range(dmax, 0, -1):
+
+    def _fold_level(sized: DataFrame, r: int) -> DataFrame:
+        # round r folds depth dmax − r into the parents one level up
         contrib = (
-            sized.filter(F.col("depth") == d)
+            sized.filter(F.col("depth") == dmax - r)
             .groupBy(F.col("parent").alias("n"))
             .agg(F.sum("size").alias("_cs"))
         )
-        sized = (
+        return (
             sized.join(contrib, "n", "left_outer")
             .withColumn("size", F.col("size") + F.coalesce("_cs", F.lit(0)))
             .drop("_cs")
-            .transform(materialize)
         )
+
+    sized = fixpoint(
+        tree.withColumn("size", F.lit(1).cast("long")),
+        _fold_level,
+        name="biconnectivity subtree sizes",
+        max_rounds=dmax,
+    )
     # sibling offset: Σ sizes of same-parent siblings with smaller id
     w_sib = (
         W.partitionBy("parent")
@@ -233,34 +240,41 @@ def _sparse_extrema(
     maps an interval LENGTH to its query level exactly (integer
     ranges, no float log2)."""
     spark = nodes.sparkSession
-    tbl = nodes.select(
-        F.lit(0).alias("k"),
-        F.col("tin").alias("pos"),
-        F.col("m_low").alias("lo"),
-        F.col("m_high").alias("hi"),
-    ).transform(materialize)
-    levels = [(0, 1, 1, 1)]
-    k, span = 1, 2
-    while span <= max(1, n_rows):
-        prev = tbl.filter(F.col("k") == k - 1)
+    n = max(1, n_rows)
+    n_levels = n.bit_length() - 1  # levels k ≥ 1 with 2^k ≤ n
+    levels = [
+        (k, 2**k, min(2 ** (k + 1) - 1, n), 2**k) for k in range(n_levels + 1)
+    ]
+
+    # the table is the union of every level so far; round r adds level
+    # k = r + 1 from level r, and the replaced union is released
+    def _level(tbl: DataFrame, r: int) -> DataFrame:
+        prev = tbl.filter(F.col("k") == r)
         shifted = prev.select(
-            (F.col("pos") - F.lit(span // 2)).alias("pos"),
+            (F.col("pos") - F.lit(2**r)).alias("pos"),
             F.col("lo").alias("_l2"),
             F.col("hi").alias("_h2"),
         )
-        nxt = (
-            prev.join(shifted, "pos", "left_outer")
-            .select(
-                F.lit(k).alias("k"),
+        return tbl.unionByName(
+            prev.join(shifted, "pos", "left_outer").select(
+                F.lit(r + 1).alias("k"),
                 "pos",
                 F.least("lo", F.coalesce("_l2", "lo")).alias("lo"),
                 F.greatest("hi", F.coalesce("_h2", "hi")).alias("hi"),
             )
         )
-        tbl = tbl.unionByName(nxt).transform(materialize)
-        levels.append((k, span, min(2 * span - 1, n_rows), span))
-        k += 1
-        span *= 2
+
+    tbl = fixpoint(
+        nodes.select(
+            F.lit(0).alias("k"),
+            F.col("tin").alias("pos"),
+            F.col("m_low").alias("lo"),
+            F.col("m_high").alias("hi"),
+        ),
+        _level,
+        name="biconnectivity sparse table",
+        max_rounds=n_levels,
+    )
     lv = spark.createDataFrame(
         levels, "k int, len_lo long, len_hi long, span long"
     )

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .graph import NODE_ID, SOURCE_ID, TARGET_ID
-from ._materialize import fixpoint, materialize, materialize_count
+from ._materialize import _settled, fixpoint, materialize, materialize_count
 
 
 def node_degrees(edges: DataFrame) -> DataFrame:
@@ -120,12 +120,6 @@ def connected_components(
         comp, _round, name="connected_components", max_rounds=max_iter,
         done=_settled,
     ).select(NODE_ID, "component")
-
-
-def _settled(state: DataFrame, _) -> bool:
-    """:func:`fixpoint` ``done`` test for states that carry a per-row
-    ``_chg`` flag: no row changed this round."""
-    return state.filter("_chg").limit(1).count() == 0
 
 
 def _sym(pairs: DataFrame) -> DataFrame:

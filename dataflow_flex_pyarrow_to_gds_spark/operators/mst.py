@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import SOURCE_ID, TARGET_ID
-from ._materialize import materialize, materialize_count
+from ._materialize import _settled, fixpoint, materialize
 
 
 def minimum_spanning_forest(
@@ -82,7 +82,6 @@ def minimum_spanning_forest(
             f"minimum_spanning_forest: max_jumps must be >= 1, "
             f"got {max_jumps}"
         )
-    spark = edges.sparkSession
     best = F.min if objective == "minimum" else F.max
     from pyspark.sql.types import IntegralType
 
@@ -143,16 +142,11 @@ def minimum_spanning_forest(
         .transform(materialize)
     )
     chosen_parts: list[DataFrame] = []
-    # range(max_rounds + 1): the top-of-loop emptiness probe needs one
-    # iteration BEYOND the last merge round to observe completion, so a
-    # forest finishing in exactly max_rounds merges must not trip the
-    # for/else raise (the scc.py backward-mark off-by-one, ADVICE r13 —
-    # caught again here by the r14 review). The budget semantics stay
-    # "at most max_rounds MERGE rounds".
-    for _ in range(max_rounds + 1):
-        # label endpoints with their component
-        # r15: checkpoint + emptiness probe fused into ONE job
-        ec, n_ec = materialize_count(
+
+    # edges labelled with their endpoints' components, keeping only
+    # those that still cross two components
+    def _cross(comp: DataFrame) -> DataFrame:
+        return (
             e.join(
                 comp.select(
                     F.col("_n").alias("_u"), F.col("_c").alias("_cu")
@@ -167,8 +161,23 @@ def minimum_spanning_forest(
             )
             .filter(F.col("_cu") != F.col("_cv"))
         )
-        if n_ec == 0:
-            break  # forest complete (per component)
+
+    def _jump(parent: DataFrame, _) -> DataFrame:
+        # r15: the doubling join already sees BOTH p and p(p) — the
+        # change flag rides it, and the probe is a flag filter on the
+        # checkpoint instead of a separate join job per jump
+        parent = parent.select("_c", "_p")
+        rgt = parent.select(
+            F.col("_c").alias("_rc"), F.col("_p").alias("_pp")
+        )
+        return parent.join(rgt, parent["_p"] == rgt["_rc"]).select(
+            parent["_c"],
+            rgt["_pp"].alias("_p"),
+            (rgt["_pp"] != parent["_p"]).alias("_chg"),
+        )
+
+    def _merge(ec: DataFrame, _) -> DataFrame:
+        nonlocal comp
         # min outgoing edge per component under the (w, u, v) total
         # order; the far component rides in the struct for contraction
         half = ec.select(
@@ -227,38 +236,19 @@ def minimum_spanning_forest(
                 .otherwise(parent["_p"])
                 .alias("_p"),
             )
-            .transform(materialize)
         )
-        # pointer doubling to the root: p ← p(p), ≤ ⌈log₂ V⌉ steps.
-        # range(max_jumps + 1): `still` is change-detection, so
-        # convergence in exactly max_jumps productive doublings needs
-        # one extra confirming iteration to break (same off-by-one
-        # class as the merge loop above).
-        for _j in range(max_jumps + 1):
-            rgt = parent.select(
-                F.col("_c").alias("_rc"), F.col("_p").alias("_pp")
-            )
-            # r15: the doubling join already sees BOTH p and p(p) —
-            # the change flag rides it, and the probe is a flag filter
-            # on the checkpoint instead of a separate join job per jump
-            nxt, _ = materialize_count(
-                parent.join(rgt, parent["_p"] == rgt["_rc"])
-                .select(
-                    parent["_c"],
-                    rgt["_pp"].alias("_p"),
-                    (rgt["_pp"] != parent["_p"]).alias("_chg"),
-                )
-            )
-            still = nxt.filter("_chg").limit(1).count() > 0
-            parent = nxt.select("_c", "_p")
-            if not still:
-                break
-        else:
-            raise RuntimeError(
-                "minimum_spanning_forest: pointer doubling still "
-                f"moving after {max_jumps} jumps — raise max_jumps; a "
-                "truncated contraction would mislabel components"
-            )
+        # pointer doubling to the root: p ← p(p), ≤ ⌈log₂ V⌉ steps;
+        # `_chg` is change detection, so convergence in exactly
+        # max_jumps productive doublings takes one confirming round
+        parent = fixpoint(
+            parent,
+            _jump,
+            name="minimum_spanning_forest",
+            max_rounds=max_jumps + 1,
+            done=_settled,
+            hint="pointer doubling still moving; raise max_jumps (a "
+            "truncated contraction would mislabel components)",
+        )
         # relabel through freshly-aliased parent columns: parent's _c
         # descends from comp's _c (same exprId), so a direct
         # comp._c == parent._c join trips Spark's ambiguous-self-join
@@ -271,20 +261,22 @@ def minimum_spanning_forest(
             .select(comp["_n"], relabel["_np"].alias("_c"))
             .transform(materialize)
         )
-    else:
-        raise RuntimeError(
-            "minimum_spanning_forest: components still merging after "
-            f"{max_rounds} rounds — raise max_rounds (components halve "
-            "per round, so this needs ~log2(V) rounds); a truncated "
-            "forest would silently disconnect components"
-        )
-    wtype = e.schema["_w"].dataType.simpleString()
-    utype = e.schema["_u"].dataType.simpleString()
-    if not chosen_parts:
-        return spark.createDataFrame(
-            [],
-            f"edge_u {utype}, edge_v {utype}, weight {wtype}",
-        )
+        return _cross(comp)
+
+    # the merge state is the cross-component edge set; ``comp`` rides
+    # beside it, and a round whose checkpoint counts 0 rows completed
+    # the forest (per component). An edgeless input spends one empty
+    # merge round and returns an empty forest with the input's types.
+    fixpoint(
+        _cross(comp),
+        _merge,
+        name="minimum_spanning_forest",
+        max_rounds=max_rounds,
+        done=lambda _, rows: rows == 0,
+        hint="components still merging; raise max_rounds (components "
+        "halve per round, so this needs ~log2(V) rounds; a truncated "
+        "forest would silently disconnect components)",
+    )
     out = chosen_parts[0]
     for part in chosen_parts[1:]:
         out = out.unionByName(part)

@@ -69,7 +69,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import NODE_ID, SOURCE_ID, TARGET_ID
-from ._materialize import materialize, materialize_count
+from ._materialize import _settled, fixpoint, materialize, materialize_count
 
 import threading
 
@@ -105,6 +105,14 @@ def strongly_connected_components(
     replays it as a recursive transitive closure plus a mutual-
     reachability min. Raises loudly if either fixpoint or the outer
     peel exceeds its round budget (see module docstring)."""
+    # published before any work, so a call that raises leaves ITS
+    # counters (which budget tripped), never the previous call's
+    stats = _RUN_STATS_TLS.stats = {
+        "trim_rounds": 0,
+        "outer_rounds": 0,
+        "color_rounds": [],
+        "mark_rounds": [],
+    }
     if max_outer < 1:
         raise ValueError(
             f"strongly_connected_components: max_outer must be >= 1, "
@@ -128,12 +136,6 @@ def strongly_connected_components(
     )
     spark = edges.sparkSession
     found_parts: list[DataFrame] = []
-    stats = {
-        "trim_rounds": 0,
-        "outer_rounds": 0,
-        "color_rounds": [],
-        "mark_rounds": [],
-    }
     # -- Trim pre-pass (r14): peel trivial SCCs before any fixpoint ----
     # A node missing an in-edge OR an out-edge in the remaining graph
     # cannot lie on a cycle → singleton component, scc_id = itself.
@@ -141,7 +143,9 @@ def strongly_connected_components(
     # coloring loop below is complete without it.
     # r15: every checkpoint in the trim loop carries its row count
     # (materialize_count), so the emptiness probes are arithmetic on
-    # counts already paid for — zero extra probe jobs per round
+    # counts already paid for — zero extra probe jobs per round.
+    # Hand-rolled, not fixpoint(): each trivial part lazily reads the
+    # remaining set it replaces, so no round here is ever superseded
     for _ in range(max(trim_rounds, 0)):
         if n_remaining == 0:
             break
@@ -172,9 +176,8 @@ def strongly_connected_components(
         )
         stats["trim_rounds"] += 1
         remaining, n_remaining = nontrivial, n_nontrivial
-    for _outer in range(max_outer):
-        if n_remaining == 0:
-            break
+    # -- outer peel: one round finds every current root's component ---
+    def _peel(remaining: DataFrame, _) -> DataFrame:
         stats["outer_rounds"] += 1
         e = (
             e_all.join(
@@ -185,12 +188,8 @@ def strongly_connected_components(
             )
             .transform(materialize)
         )
+
         # -- phase 1: forward min-label fixpoint ------------------------
-        color = remaining.select(
-            NODE_ID, F.col(NODE_ID).alias("_color")
-        ).transform(materialize)
-        converged = False
-        color_rounds = 0
         # r15 round shape: the change flag rides the same left join
         # (labels only decrease, so changed ⟺ strictly smaller) and a
         # label SHORTCUT through the previous round's checkpointed
@@ -199,8 +198,9 @@ def strongly_connected_components(
         # (color(v)=u means u→v; color(u)=w means w→u, hence w→v), so
         # labels stay reacher-ids, stay monotone, and every fixpoint is
         # still the min-reacher coloring; rounds O(depth) → O(log depth)
-        for _ in range(max_rounds):
-            color_rounds += 1
+        def _color_round(color: DataFrame, _) -> DataFrame:
+            stats["color_rounds"][-1] += 1
+            color = color.select(NODE_ID, "_color")
             cand = (
                 e.join(
                     color.select(
@@ -212,7 +212,7 @@ def strongly_connected_components(
                 .groupBy(F.col("_t").alias(NODE_ID))
                 .agg(F.min("_cs").alias("_cin"))
             )
-            nxt = (
+            return (
                 color.join(cand, NODE_ID, "left_outer")
                 .select(
                     NODE_ID,
@@ -235,20 +235,18 @@ def strongly_connected_components(
                     (F.least("_c1", "_c2") < F.col("_old")).alias("_chg"),
                 )
             )
-            nxt, _ = materialize_count(nxt)
-            still = nxt.filter("_chg").limit(1).count() > 0
-            color = nxt.select(NODE_ID, "_color")
-            if not still:
-                converged = True
-                break
-        stats["color_rounds"].append(color_rounds)
-        if not converged:
-            raise RuntimeError(
-                "strongly_connected_components: color fixpoint still "
-                f"changing after {max_rounds} rounds — raise max_rounds "
-                "for a deeper graph; a truncated coloring would "
-                "silently merge components"
-            )
+
+        stats["color_rounds"].append(0)
+        color = fixpoint(
+            remaining.select(NODE_ID, F.col(NODE_ID).alias("_color")),
+            _color_round,
+            name="strongly_connected_components",
+            max_rounds=max_rounds,
+            done=_settled,
+            hint="color fixpoint still changing; raise max_rounds for a "
+            "deeper graph (a truncated coloring would silently merge "
+            "components)",
+        ).select(NODE_ID, "_color")
         # -- phase 2: backward mark within each color class -------------
         # edges whose endpoints share a color, keyed for the backward walk
         ec = (
@@ -278,10 +276,10 @@ def strongly_connected_components(
         # frontier was never observed before range() exhausted)
         # r15: frontier checkpoint + drain probe fused into one job;
         # the mark set stays a LAZY union of checkpointed frontiers
-        # (children are checkpoints — no recompute, no per-round copy)
-        mark_rounds = 0
-        for _ in range(max_rounds):
-            mark_rounds += 1
+        # (children are checkpoints — no recompute, no per-round copy),
+        # which is why this walk is not a fixpoint() round: every
+        # frontier stays live
+        for mark_rounds in range(1, max_rounds + 1):
             preds = (
                 ec.join(
                     frontier.select(F.col(NODE_ID).alias("_t")),
@@ -312,18 +310,19 @@ def strongly_connected_components(
                 NODE_ID, F.col("_color").cast("long").alias("scc_id")
             )
         )
-        remaining, n_remaining = materialize_count(
-            remaining.join(mark, NODE_ID, "anti")
+        return remaining.join(mark, NODE_ID, "anti")
+
+    if n_remaining > 0:
+        fixpoint(
+            remaining,
+            _peel,
+            name="strongly_connected_components",
+            max_rounds=max_outer,
+            done=lambda _, rows: rows == 0,
+            hint="nodes still unassigned after the outer peels; the "
+            "condensation DAG is deeper than max_outer, raise it (a "
+            "partial result would silently drop components)",
         )
-    else:
-        if n_remaining > 0:
-            raise RuntimeError(
-                "strongly_connected_components: nodes still unassigned "
-                f"after {max_outer} outer peels — the condensation DAG "
-                "is deeper than max_outer; raise it (a partial result "
-                "would silently drop components)"
-            )
-    _RUN_STATS_TLS.stats = dict(stats)
     if not found_parts:
         return spark.createDataFrame([], f"{NODE_ID} long, scc_id long")
     out = found_parts[0]

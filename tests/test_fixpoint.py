@@ -1,6 +1,6 @@
-"""fixpoint() — the one superstep driver behind graph_algo's iterative
-loops: round budget, uniform non-convergence error, and release of
-superseded round checkpoints."""
+"""fixpoint() — the one superstep driver behind the iterative graph
+operators (graph_algo, scc, mst, biconnect): round budget, uniform
+non-convergence error, and release of superseded round checkpoints."""
 
 from __future__ import annotations
 
@@ -8,6 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataflow_flex_pyarrow_to_gds_spark.operators._materialize import fixpoint
+from dataflow_flex_pyarrow_to_gds_spark.operators.biconnect import (
+    _sparse_extrema,
+)
 from dataflow_flex_pyarrow_to_gds_spark.operators.graph_algo import (
     dag_longest_path,
     hits_fixedpoint,
@@ -99,3 +102,19 @@ def test_graph_loops_release_superseded_rounds(spark):
     hits = hits_fixedpoint(chain, iters=5).collect()
     assert {r["kind"] for r in hits} == {"hub", "authority"}
     assert len(hits) == 40
+
+
+def test_sparse_table_releases_superseded_levels(spark):
+    # 64 rows → 6 levels; each level's table holds every level below
+    # it, so keeping superseded tables would retain O(L²·n) rows
+    nodes = spark.range(1, 65).select(
+        F.col("id").alias("tin"),
+        (F.col("id") * 7 % 61).alias("m_low"),
+        (F.col("id") * 13 % 59).alias("m_high"),
+    )
+    before = _persistent_ids(spark)
+    tbl, lv = _sparse_extrema(nodes, 64)
+    new = _persistent_ids(spark) - before
+    assert len(new) <= 2, new
+    assert tbl.count() == 64 * 7
+    assert [tuple(r) for r in lv.orderBy("k").collect()][-1] == (6, 64, 64, 64)

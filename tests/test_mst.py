@@ -97,6 +97,8 @@ def test_mst_guards(spark):
     path = _edges(spark, [(1, 2, 1), (2, 3, 5), (3, 4, 1)])
     with pytest.raises(RuntimeError, match="still merging"):
         minimum_spanning_forest(path, max_rounds=1)
+    # ... and exactly at budget it returns the whole forest
+    assert minimum_spanning_forest(path, max_rounds=2).count() == 3
 
 
 def test_mst_empty_and_null_edges(spark):

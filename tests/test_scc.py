@@ -5,6 +5,7 @@ import itertools
 import pytest
 
 from dataflow_flex_pyarrow_to_gds_spark.operators.scc import (
+    last_run_stats,
     scc_condensation,
     strongly_connected_components,
 )
@@ -87,8 +88,15 @@ def test_scc_guards(spark):
         strongly_connected_components(e, max_rounds=1)
     # condensation-deeper-than-max_outer raises loudly: 2 chained SCCs
     deep = _edges(spark, [(1, 2), (2, 1), (2, 3), (3, 4), (4, 3)])
+    strongly_connected_components(deep).collect()
+    assert last_run_stats()["outer_rounds"] == 2
+    # exactly at budget it returns both components
+    got = strongly_connected_components(deep, max_outer=2).collect()
+    assert {r["scc_id"] for r in got} == {1, 3}
     with pytest.raises(RuntimeError, match="outer peels"):
         strongly_connected_components(deep, max_outer=1)
+    # the failed call's own counters, not the previous call's
+    assert last_run_stats()["outer_rounds"] == 1
 
 
 def test_scc_self_loops_and_nulls(spark):
